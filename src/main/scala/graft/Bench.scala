@@ -110,26 +110,7 @@ object Bench {
     val boardT0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - boardT0) / 1e9
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same extensions as Verify: benched plans = shipped plans
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // NOTE: forcing small file splits (spark.sql.files.maxPartitionBytes
-      // = 2m) to parallelize the single ~20 MB-per-table scans was
-      // measured SLOWER here (23.4s vs 19.5s total): per-split scheduling
-      // and footer overhead beats scan parallelism at this scale. The
-      // default split size stays; on a real cluster the same knob is
-      // sized to executor memory, not to core count.
-      // shuffle/spill files ride the same tmpfs-preferring scratch
-      // root as streaming checkpoints (Common.scratchRoot — a
-      // throttled local volume must not masquerade as engine cost)
-      .config("spark.local.dir",
-        graft.queries.Common.scratchRoot + "/graft_spark_local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(cpus)
 
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted

@@ -41,4 +41,33 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** The one session the mains (Verify, Bench, tools.Trace) run on, so
+    * the correctness gate, the board and the trace see the same plans.
+    */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      // the engine's own sessions carry its extensions: custom SQL
+      // functions + the TopK strategy (incl. the row_number-top-k
+      // auto-route), so every main exercises the plans a library user
+      // gets
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      // NOTE: forcing small file splits (spark.sql.files.maxPartitionBytes
+      // = 2m) to parallelize the single ~20 MB-per-table scans was
+      // measured SLOWER here (23.4s vs 19.5s total): per-split scheduling
+      // and footer overhead beats scan parallelism at this scale. The
+      // default split size stays; on a real cluster the same knob is
+      // sized to executor memory, not to core count.
+      // shuffle/spill files ride the same tmpfs-preferring scratch
+      // root as streaming checkpoints (Common.scratchRoot — a
+      // throttled local volume must not masquerade as engine cost)
+      .config("spark.local.dir", Common.scratchRoot + "/graft_spark_local")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -51,10 +51,11 @@ object StallGuard {
         try sc.cancelJobGroup(gid) catch { case _: Throwable => }
         // the group cancel alone is NOT enough: AQE materializes
         // shuffle stages through its own QueryStageCreator threads and
-        // (measured, tools/ProbeCancel) those map-stage jobs do not
-        // carry the caller's job group — cancelJobGroup left the job
-        // running and count() parked in withFinalPlanUpdate forever,
-        // while cancelAllJobs both failed the job (count threw in
+        // (measured; StallGuardSpec's first test is the referee) those
+        // map-stage jobs do not carry the caller's job group —
+        // cancelJobGroup left the job running and count() parked in
+        // withFinalPlanUpdate forever, while cancelAllJobs both
+        // failed the job (count threw in
         // ~0.1 s) and actually killed the codegen tasks (0 burning
         // threads after). The bench JVM is single-tenant and runs
         // queries serially, so every active job belongs to the rep

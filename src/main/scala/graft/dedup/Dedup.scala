@@ -512,8 +512,8 @@ object Dedup {
   }
 
   /** The Ed-Join candidate stage alone ((a_id, b_id) before the banded
-    * verify) — exposed for the scale probes so candidate mass is
-    * measured on EXACTLY the production gate, not a probe-local copy.
+    * verify). Its final `distinct` is the candidate count in q105's
+    * `graft.tools.Trace` plan.
     */
   private[graft] def editDistanceCandidates(strs: DataFrame, q: Int,
       dMax: Int): DataFrame = {
@@ -652,8 +652,9 @@ object Dedup {
       .filter(col("sz") > 0)
 
   /** The PPJoin candidate stage alone ((a_id, b_id) before the exact
-    * Jaccard verify) — exposed for the scale probes, same rationale as
-    * [[editDistanceCandidates]].
+    * Jaccard verify). Its final `distinct` is the candidate count in
+    * q106's `graft.tools.Trace` plan, read at half: that stage also
+    * runs once to sample q106's `orderBy` range bounds.
     */
   private[graft] def setSimilarityCandidates(sized: DataFrame, tNum: Int,
       tDen: Int): DataFrame = {
@@ -669,7 +670,7 @@ object Dedup {
     // and df(k) = df(e) whenever k is collision-free, so the selected
     // prefixes (hence the candidate set) are bit-identical to the
     // string-keyed form on any collision-free corpus (probed: same
-    // 309,983 candidates at sf0.1). The df map shrinks to (k, df) and
+    // 309,803 candidates at sf0.1). The df map shrinks to (k, df) and
     // the self-join input to (k, id, sz): no string reaches the
     // candidate self-join's exchange or its sort.
     val elems = sized.select(col("id"), col("sz"), explode(col("sh")).as("e"))

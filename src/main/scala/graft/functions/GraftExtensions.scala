@@ -5,14 +5,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions wiring for graft's custom expressions — the
-  * construction-time alternative to [[GraftFunctions.register]]:
+  * construction-time alternative to [[GraftFunctions.register]]: a
+  * session built with
   *
   * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
   * }}}
   *
-  * makes `graft_minhash_signature` / `graft_lsh_bucket` / `graft_jaccard`
+  * (as `graft.SparkEntry.session` does) makes `graft_minhash_signature` / `graft_lsh_bucket` / `graft_jaccard`
   * available in SQL text on every session of that context (the runtime
   * `register` path remains for sessions we did not construct, e.g. the
   * driver's).

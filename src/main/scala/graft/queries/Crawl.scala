@@ -77,9 +77,8 @@ object Crawl {
       .toDF("host", "url", "delay_s")
   }
 
-  /** Shared builder (probe discipline — the ScaleProbe r18 row calls
-    * THIS, not a re-derivation): the q216 frontier pipeline over any
-    * frame with a `doc_id` column — synthesize messy URLs + a
+  /** Shared builder (q216 and CrawlSpec): the q216 frontier pipeline
+    * over any frame with a `doc_id` column — synthesize messy URLs + a
     * /private/ probe per doc, canonicalize (T120), gate through the
     * per-HOST robots dimension (T121; parse once per host, verdict by
     * broadcast join — round 11 production shape), roll up per host.
@@ -270,7 +269,7 @@ object Crawl {
     ranks.select(col("h").as("host"), col("pr"))
   }
 
-  /** Shared builder (q237/q246/ScaleProbe r20 — review-r12: three
+  /** Shared builder (q237/q246 — review-r12: three
     * hand-synced copies of this scale-sensitive block, only one
     * plan-gated): largest-remainder apportionment of `units` across
     * the (host, pr) frame — floor shares by exact integer

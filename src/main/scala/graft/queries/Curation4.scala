@@ -63,15 +63,17 @@ object Curation4 {
       explode(graft.functions.WinnowFp(docs.sparkSession,
         col("text"))).as("v"))
 
-  /** q205's routing decision over a fingerprint explode frame: the df
-    * HISTOGRAM (one token-keyed aggregation, then a count-of-counts
-    * over it — bounded by the number of distinct df values) feeds a
-    * single-partition cumulative window that derives, in ONE 1-row
-    * read, the capped pair mass Σ_{df≤τ} df², the q194 τ-budget
-    * τ·|fp|, and — when the mass is over budget — the TIGHTENED cap
-    * τ* = max{c : Σ_{df≤c} df² ≤ τ·|fp|} (floor 1). Returns
-    * (tier, effective cap, n_fp, capped_mass, τ). Shared by the query
-    * and the r17 probe — one definition, no probe drift.
+  /** q205's routing decision over a fingerprint df frame (v, c): the
+    * df HISTOGRAM (a count-of-counts over it — bounded by the number
+    * of distinct df values) feeds a single-partition cumulative
+    * window that derives, in ONE 1-row read, the capped pair mass
+    * Σ_{df≤τ} df², the q194 τ-budget τ·|fp|, and — when the mass is
+    * over budget — the TIGHTENED cap τ* = max{c : Σ_{df≤c} df² ≤
+    * τ·|fp|} (floor 1). Returns (tier, effective cap, n_fp,
+    * capped_mass, τ). [[winnowAuto]] materializes the df frame (v, c)
+    * ONCE and feeds both this and the hot-fingerprint filter (the df
+    * aggregation is the dominant cost at stress scale; review-r10
+    * caught the shipped shape paying it twice).
     *
     * Why tighten instead of switching to the positional containment
     * tier (the r16 prose rule): the r17 probe MEASURED that rule and
@@ -85,17 +87,6 @@ object Curation4 {
     * the df shape — and it is MOSS-faithful (the winnowing paper's own
     * system drops fingerprints shared by more than N documents as
     * template/boilerplate evidence).
-    */
-  def winnowRouteStats(ex: org.apache.spark.sql.DataFrame,
-      tau: org.apache.spark.sql.DataFrame)
-      : (String, Long, Long, Long, Long) =
-    statsFromDf(ex.groupBy("v").agg(count(lit(1)).as("c")), tau)
-
-  /** The routing rule over an already-built fingerprint df frame
-    * (v, c) — [[winnowAuto]] materializes that frame ONCE and feeds
-    * both this and the hot-fingerprint filter (the df aggregation is
-    * the dominant cost at stress scale; review-r10 caught the shipped
-    * shape paying it twice).
     */
   private def statsFromDf(dfc: org.apache.spark.sql.DataFrame,
       tau: org.apache.spark.sql.DataFrame)

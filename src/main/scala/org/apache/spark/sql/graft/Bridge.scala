@@ -1,14 +1,17 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
-/** Minimal bridge into `private[sql]` plan-construction API (the
-  * standard extension-project technique: `private[sql]` members are
-  * visible from subpackages of org.apache.spark.sql). Everything else in
-  * graft stays on public APIs; only DataFrame-over-custom-LogicalPlan
-  * construction needs this.
+/** Minimal bridge into `private[sql]`/`private[spark]` API (the
+  * standard extension-project technique: such members are visible from
+  * subpackages of org.apache.spark.sql). Everything else in graft stays
+  * on public APIs; only DataFrame-over-custom-LogicalPlan construction
+  * and the tracing listeners of `graft.tools.Trace` need this.
   */
 object Bridge {
 
@@ -36,4 +39,17 @@ object Bridge {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Block until every event posted so far has reached every listener.
+    * Listener counts are complete only after this returns.
+    */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** The action name (`localCheckpoint`, `save`, ...; unnamed for
+    * streaming micro-batches) and the query of an ended SQL execution:
+    * what a `QueryExecutionListener` is handed for a named execution.
+    */
+  def endedExecution(e: SparkListenerSQLExecutionEnd)
+      : (Option[String], QueryExecution) = (e.executionName, e.qe)
 }
