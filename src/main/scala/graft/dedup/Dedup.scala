@@ -177,12 +177,43 @@ object Dedup {
   }
 
   /** Transitive duplicate clusters from candidate pairs: connected
-    * components via alternating LARGE-STAR / SMALL-STAR contraction
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * O(log² n) rounds regardless of component diameter, vs O(diameter)
-    * for plain min-label propagation. A 1M-node chain converges in ~20
-    * rounds instead of 500k; dup clusters at 100 TB can contain exactly
-    * such long chains of pairwise-similar shards.
+    * components, with the algorithm picked from the size of the input.
+    *
+    * The pairs are pinned once (`localCheckpoint`); counting them is the
+    * action that runs the upstream pipeline. Then:
+    *  - long ids and at most [[LocalContractMaxEdges]] pairs: one task
+    *    labels the graph by union-find ([[localClusters]]) and the
+    *    labels are pinned eagerly — two jobs in all, one task for the
+    *    labelling;
+    *  - more pairs, or ids that are not longs: the distributed
+    *    star-contraction rounds of [[starClusters]], one job per
+    *    half-round.
+    * The pinned pairs are released once either path has read them.
+    *
+    * Returns (doc_id, cluster_id = smallest doc_id in the component)
+    * for every doc that appears in at least one pair. A null id joins
+    * no component and comes out once as (null, null).
+    */
+  def dupClusters(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+    // pinned once: the count and whichever path runs below read it,
+    // instead of each re-running the candidate pipeline
+    val p0 = pairs.localCheckpoint(eager = false)
+    val idsAreLong = Seq("a_id", "b_id").forall(c =>
+      p0.schema(c).dataType == org.apache.spark.sql.types.LongType)
+    if (idsAreLong && p0.count() <= LocalContractMaxEdges) {
+      val labels = localClusters(p0).localCheckpoint()
+      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(p0)
+      labels
+    } else starClusters(p0, maxIter)
+  }
+
+  /** Connected components of a pinned pair frame `p0` via alternating
+    * LARGE-STAR / SMALL-STAR contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond") — O(log² n) rounds regardless
+    * of component diameter, vs O(diameter) for plain min-label
+    * propagation. A 1M-node chain converges in ~20 rounds instead of
+    * 500k; dup clusters at 100 TB can contain exactly such long chains
+    * of pairwise-similar shards.
     *
     * Edges are kept directed child→parent with child > parent:
     *  - large-star: every strictly-larger neighbor of x re-points to
@@ -200,20 +231,15 @@ object Dedup {
     * says "stable" — no per-round isEmpty re-plan.
     *
     * Logs a loud warning if maxIter is hit before the fixpoint (callers
-    * get best-effort labels, never silently-partial ones).
-    *
-    * Returns (doc_id, cluster_id = smallest doc_id in the component)
-    * for every doc that appears in at least one pair.
+    * get best-effort labels, never silently-partial ones). Releases
+    * `p0` (when it is a checkpoint) and every superseded round; the
+    * final round and the node list stay pinned for the returned frame.
+    * Same output contract as [[dupClusters]].
     */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    // Materialize the incoming pair pipeline ONCE: both the canonical
-    // edge set and the node list below read this checkpoint. Deriving
-    // nodes straight from `pairs` would re-execute the whole candidate
-    // pipeline (LSH banding + any exact-scoring joins) a second time.
+  private[graft] def starClusters(p0: DataFrame, maxIter: Int): DataFrame = {
     // eager=false everywhere: the checksum aggregate right after each
     // checkpoint is the materializing action, so every round costs ONE
     // job (checkpoint write + checksum in the same pass) instead of two
-    val p0 = pairs.localCheckpoint(eager = false)
     // canonical child→parent (child > parent) edges
     var edges = p0
       .filter(col("a_id") =!= col("b_id"))
@@ -295,17 +321,17 @@ object Dedup {
     * are component minima. New edges can only change the clusters they
     * TOUCH, so the recompute is confined to exactly those: the affected
     * subgraph is (star edges of touched clusters) ∪ (new pairs), which
-    * [[dupClusters]] contracts starting from depth-1 stars — O(touched)
-    * work, not O(corpus). Untouched clusters pass through by identity.
-    * Labels stay canonical (cluster_id = component minimum): every
-    * member and center of a touched cluster appears in the subgraph, so
-    * the merged component's minimum is the global one.
+    * [[dupClusters]] labels — O(touched) work, not O(corpus), and by
+    * its size rule usually in one task. Untouched clusters pass through
+    * by identity. Labels stay canonical (cluster_id = component
+    * minimum): every member and center of a touched cluster appears in
+    * the subgraph, so the merged component's minimum is the global one.
     *
     * At 100 TB this is the ingest-time shape: the nightly batch's LSH
     * pairs (or q102's streaming verdicts) touch a few thousand clusters;
     * the billions of settled labels are never shuffled — the touched
     * filter is a semi-join on cluster_id, and only touched members flow
-    * into the contraction rounds.
+    * into the contraction.
     *
     * Returns the complete new labeling over prev's nodes ∪ the new
     * pairs' nodes.
@@ -340,88 +366,115 @@ object Dedup {
     val subEdges = affected.filter(col("doc_id") =!= col("cluster_id"))
         .select(col("doc_id").as("a_id"), col("cluster_id").as("b_id"))
       .union(np)
-    // Contraction route (r17, VERDICT-r16 item 3): the iterative
-    // star-contraction costs ~8-10 scheduled jobs (per-round
-    // checkpoint + checksum, convergence confirm, node list) — pure
-    // scheduling when the touched subgraph is micro-batch-sized
-    // (measured: ~2.0 s of q126's ~2.1 s per-batch incremental wall).
-    // The subgraph is pinned and counted ONCE (the count is the
-    // checkpoint's materializing action); at or below
-    // [[LocalContractMaxEdges]] it is contracted in ONE task by an
-    // exact min-label union-find — the same task-local bound the
-    // broadcasts above already impose on the batch, applied to the
-    // touched membership. Larger subgraphs (or non-long ids) take the
-    // distributed [[dupClusters]] rounds exactly as before.
-    val sub = subEdges.localCheckpoint(eager = false)
-    val idsAreLong = sub.schema.fields.forall(_.dataType ==
-      org.apache.spark.sql.types.LongType)
-    val nSub = sub.count()
-    val relabeled =
-      if (idsAreLong && nSub <= LocalContractMaxEdges) localClusters(sub)
-      else dupClusters(sub, maxIter)
+    val relabeled = dupClusters(subEdges, maxIter)
     val untouched = p.join(touchedClusters, Seq("cluster_id"), "left_anti")
       .select(col("doc_id"), col("cluster_id"))
     untouched.union(relabeled)
   }
 
-  /** One-task ceiling for the union-find fast path of
-    * [[incrementalClusters]] — ~2M edges is tens of MB of hash-map
-    * state, comfortably one task; past it the distributed rounds take
-    * over (the same "too big for the incremental path" boundary the
-    * broadcast hints already declare).
+  /** Largest pair count [[dupClusters]] labels in one task
+    * ([[localClusters]]). Measured at this size on a random graph with
+    * every id distinct (the worst case, 4M ids): [[MinLabels]]
+    * allocates 110 MiB in all, an upper bound on its live heap, whose
+    * peak by array sizes is 78 MiB (DedupSpec pins the 110 MiB figure
+    * under 128 MiB). Past it the distributed star rounds take over.
     */
-  private val LocalContractMaxEdges = 2000000L
+  private[graft] val LocalContractMaxEdges = 2000000L
 
   /** Exact connected components of a (small, pinned) pair frame in ONE
-    * task: min-label union-find with path compression. Bit-identical
-    * output contract to [[dupClusters]]: (doc_id, cluster_id = smallest
-    * doc_id in the component) for every doc appearing in at least one
-    * pair — ids appearing only in self-pairs label themselves, exactly
-    * like dupClusters' node list + left join. Ids must be non-null
-    * longs (every candidate-pair builder in the repo emits them so).
+    * task via [[MinLabels]]. Same output contract as [[dupClusters]]:
+    * (doc_id, cluster_id = smallest doc_id in the component) for every
+    * doc appearing in at least one pair — ids appearing only in
+    * self-pairs label themselves, and a null id comes out once as
+    * (null, null), exactly like [[starClusters]]' node list + left join.
+    * Ids must be longs.
     */
   private[graft] def localClusters(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cluster_id",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    pairs.toDF("a_id", "b_id").coalesce(1).mapPartitions { it =>
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]
-      def add(x: Long): Unit =
-        if (!parent.containsKey(x)) parent.put(x, x)
-      def find(x: Long): Long = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val ends = pairs.select(col("a_id"), col("b_id"))
+    val nullable = ends.schema.fields.exists(_.nullable)
+    val outSchema = StructType(Seq(
+      StructField("doc_id", LongType, nullable),
+      StructField("cluster_id", LongType, nullable)))
+    ends.coalesce(1).mapPartitions { it =>
+      val uf = new MinLabels
+      var sawNull = false
+      it.foreach { row =>
+        val aNull = row.isNullAt(0)
+        val bNull = row.isNullAt(1)
+        sawNull ||= aNull || bNull
+        // a pair with one null id still makes its other id a node
+        if (!aNull && !bNull) uf.add(row.getLong(0), row.getLong(1))
+        else if (!aNull) uf.add(row.getLong(0), row.getLong(0))
+        else if (!bNull) uf.add(row.getLong(1), row.getLong(1))
+      }
+      val (ids, root, n) = uf.resolve()
+      Iterator.range(0, n).map(i => Row(ids(i), ids(root(i)))) ++
+        (if (sawNull) Iterator.single(Row(null, null)) else Iterator.empty)
+    }(Encoders.row(outSchema))
+  }
+
+  /** Min-label union-find over long ids in primitive arrays: the
+    * one-task structure of [[localClusters]]. [[add]] appends both
+    * endpoints of a pair to one long array; [[resolve]] sorts and
+    * dedupes a copy into `ids`, finds each endpoint's index by binary
+    * search and unions toward the smaller index, so every root is its
+    * component's smallest id. Heap: 16 bytes per pair for the endpoints
+    * (up to twice that while the array grows), 16 more for the sorted
+    * copy, 4 per distinct id for the parent array. Single use.
+    */
+  private[graft] final class MinLabels {
+    private var ends = new Array[Long](1024)
+    private var size = 0
+
+    def add(a: Long, b: Long): Unit = {
+      if (size + 2 > ends.length)
+        ends = java.util.Arrays.copyOf(ends, ends.length * 2)
+      ends(size) = a
+      ends(size + 1) = b
+      size += 2
+    }
+
+    /** (ids, root, n): the n distinct ids in ascending order and, for
+      * each, the index in `ids` of its component's smallest id.
+      */
+    def resolve(): (Array[Long], Array[Int], Int) = {
+      val ids = java.util.Arrays.copyOf(ends, size)
+      java.util.Arrays.sort(ids)
+      var n = 0
+      var i = 0
+      while (i < size) {
+        if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+        i += 1
+      }
+      val parent = Array.range(0, n)
+      def find(x: Int): Int = {
         var r = x
-        while (parent.get(r) != r) r = parent.get(r)
+        while (parent(r) != r) r = parent(r)
         var c = x
-        while (parent.get(c) != r) {
-          val n = parent.get(c)
-          parent.put(c, r)
-          c = n
+        while (parent(c) != r) {
+          val next = parent(c)
+          parent(c) = r
+          c = next
         }
         r
       }
-      it.foreach { row =>
-        val a = row.getLong(0)
-        val b = row.getLong(1)
-        add(a); add(b)
-        if (a != b) {
-          val ra = find(a)
-          val rb = find(b)
-          // union toward the smaller root: roots stay component minima
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
+      i = 0
+      while (i < size) {
+        val ra = find(java.util.Arrays.binarySearch(ids, 0, n, ends(i)))
+        val rb = find(java.util.Arrays.binarySearch(ids, 0, n, ends(i + 1)))
+        if (ra < rb) parent(rb) = ra
+        else if (rb < ra) parent(ra) = rb
+        i += 2
       }
-      val out = new scala.collection.mutable.ArrayBuffer[Row](parent.size())
-      val keys = parent.keySet().iterator()
-      while (keys.hasNext) {
-        val k = keys.next().longValue()
-        out += Row(k, find(k))
-      }
-      out.iterator
-    }(Encoders.row(outSchema))
+      ends = null
+      // every link points to a smaller index, so one ascending pass
+      // leaves each entry on its root
+      i = 0
+      while (i < n) { parent(i) = parent(parent(i)); i += 1 }
+      (ids, parent, n)
+    }
   }
 
   /** 32-bit SimHash over a token array (token multiplicity counts, as in

@@ -36,14 +36,19 @@ object Common {
     * Spark's own footer cache primes); every action still computes
     * its result from the parquet input. Keyed by full path, so two
     * sf dirs never collide; testdata is immutable for a JVM's life.
+    * Schema inference also reads `nanosAsLong` (TIMESTAMP(NANOS)
+    * infers as LongType under it and is rejected without it), so its
+    * value is part of the key.
     */
   private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
+    new java.util.concurrent.ConcurrentHashMap[(String, String),
       org.apache.spark.sql.types.StructType]
 
   private def readWithMemo(spark: SparkSession, path: String): DataFrame = {
-    val sch = schemaMemo.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val nanosAsLong =
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val sch = schemaMemo.computeIfAbsent((path, nanosAsLong),
+      k => spark.read.parquet(k._1).schema)
     spark.read.schema(sch).parquet(path)
   }
 

@@ -393,8 +393,8 @@ object TextOps {
       (s, d) => {
         // The full production near-dup cleaning pipeline, composed
         // entirely from verified operators: single-scan shingle frame →
-        // banded candidates → exact Jaccard gate at 0.8 → star-contraction
-        // connected components → drop everything but each cluster's
+        // banded candidates → exact Jaccard gate at 0.8 → connected
+        // components (dupClusters) → drop everything but each cluster's
         // minimum id. Scale: only (id, band) keys and candidate pairs
         // shuffle; the anti-join keys are ids.
         val docs = table(s, d, "documents")

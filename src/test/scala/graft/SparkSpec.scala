@@ -26,7 +26,10 @@ object TaskFailureMonitor
     "graft_gram_matrix: expected", // GramMatrixSpec arity intercepts
     "graft.functions.GramMatrixAgg", // GramMatrixSpec overflow intercept
     "failed the declared-schema parse", // QboSourceSpec strict-parse cases
-    "Unexpected end-of-input") // QboSourceSpec truncated-JSON case
+    "Unexpected end-of-input", // QboSourceSpec truncated-JSON case
+    // CommonSpec schema-memo case: TIMESTAMP(NANOS) read without
+    // nanosAsLong
+    "Illegal Parquet type: INT64 (TIMESTAMP(NANOS,true))")
   override def onTaskEnd(
       e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
     e.reason match {

@@ -170,6 +170,135 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("starClusters ≡ localClusters on random graphs with self, " +
+      "duplicate and reversed pairs") {
+    // dupClusters labels small long-id graphs by union-find, so the
+    // star rounds, called directly, are that path's referee
+    val rnd = new scala.util.Random(4321)
+    for (trial <- 0 until 3) {
+      val n = 300
+      val pairs = (0 until 500).flatMap { _ =>
+        val (a, b) = (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)
+        if (rnd.nextInt(4) == 0) Seq((a, b), (b, a)) else Seq((a, b))
+      } ++ Seq((5000L, 5000L), (7L, 7L))
+      val df = pairs.toDF("a_id", "b_id")
+      val star = Dedup.starClusters(df, 30)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val local = Dedup.localClusters(df)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(star == local, s"trial $trial differs")
+    }
+  }
+
+  test("starClusters: 1000-node chain converges via star contraction") {
+    val chain = (0L until 999L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val got = Dedup.starClusters(chain, 30).collect()
+    assert(got.length == 1000)
+    assert(got.forall(_.getLong(1) == 0L), got.filter(_.getLong(1) != 0L).take(5).toSeq)
+  }
+
+  test("starClusters releases superseded per-round checkpoints") {
+    // the pinned input pairs and every superseded round are released;
+    // only the final round's edges and the node list, which the
+    // returned frame reads lazily, may remain
+    val chain = (0L until 200L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    Dedup.starClusters(chain.localCheckpoint(eager = false), 30).count()
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after - before <= 2, s"leaked checkpoint RDDs: $before -> $after")
+  }
+
+  /** Jobs scheduled while `body` runs, and its result. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("dupClusters labels a small long-id graph in ≤ 3 jobs and pins " +
+      "only the labels") {
+    val pairs = (0L until 200L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val (labels, jobs) = jobsDuring(Dedup.dupClusters(pairs))
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(spark.sparkContext.getPersistentRDDs.size - before == 1)
+    assert(labels.collect().forall(_.getLong(1) == 0L))
+  }
+
+  test("dupClusters routes string ids through starClusters, same labels") {
+    val pairs = Seq(("b", "a"), ("c", "b"), ("x", "y"), ("z", "z"))
+      .toDF("a_id", "b_id")
+    val (routed, jobs) = jobsDuring(Dedup.dupClusters(pairs)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+    val star = Dedup.starClusters(pairs, 30)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(routed == star)
+    assert(routed == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x",
+      "y" -> "x", "z" -> "z"))
+    assert(jobs > 3, s"$jobs jobs: the star rounds did not run")
+  }
+
+  test("a pair with a null id gives the same rows on both paths") {
+    val pairs = Seq[(Option[Long], Option[Long])]((Some(2L), Some(1L)),
+        (Some(5L), None), (None, None), (None, Some(1L)))
+      .toDF("a_id", "b_id")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).sortBy(_.toString).toSeq
+    val union = rows(Dedup.dupClusters(pairs))
+    assert(union == rows(Dedup.starClusters(pairs, 30)))
+    assert(union.toSet == Set((Some(1L), Some(1L)), (Some(2L), Some(1L)),
+      (Some(5L), Some(5L)), (None, None)))
+  }
+
+  test("incrementalClusters releases its subgraph checkpoint") {
+    // the call may leave pinned only prev's pin (1000 rows), the new
+    // pairs' pin (1 row) and the relabeled touched cluster (3 rows);
+    // the 2-edge subgraph is read once and released
+    val b1 = (0L until 1000L by 2).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val prev = Dedup.dupClusters(b1)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Dedup.incrementalClusters(prev, Seq((1L, 2000L)).toDF("a_id", "b_id"))
+      .count()
+    val pinned = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !before.contains(id) }
+      .values.map(_.count()).toSeq.sorted
+    assert(pinned == Seq(1L, 3L, 1000L), pinned)
+  }
+
+  test("MinLabels at LocalContractMaxEdges stays within its measured heap") {
+    // worst case for the one-task structure: every id distinct
+    // (4M ids). Bytes the thread allocates while building and resolving
+    // bound the structure's live heap from above; the input is drawn
+    // from a primitive generator that allocates nothing.
+    val edges = Dedup.LocalContractMaxEdges.toInt
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val rnd = new java.util.SplittableRandom(7)
+    val uf = new Dedup.MinLabels
+    val t0 = threads.getCurrentThreadAllocatedBytes
+    var i = 0
+    while (i < edges) { uf.add(rnd.nextLong(), rnd.nextLong()); i += 1 }
+    val (ids, root, n) = uf.resolve()
+    val allocated = threads.getCurrentThreadAllocatedBytes - t0
+    info(f"MinLabels at $edges%d edges: ${allocated / 1048576.0}%.1f MiB allocated")
+    // distinct ids: every edge is its own two-node component
+    assert(n == 2 * edges)
+    assert((1 until n).forall(j => ids(j - 1) < ids(j) && root(j) <= j))
+    assert((0 until n).count(j => root(j) == j) == edges)
+    assert(allocated <= 128L * 1048576, s"$allocated bytes")
+  }
+
   test("incrementalClusters falls back to distributed contraction on " +
       "non-long ids") {
     // string ids route around the union-find fast path; results must
